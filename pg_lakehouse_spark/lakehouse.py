@@ -33,9 +33,12 @@ Layout per table::
 Commit protocol: writers stage parquet under ``data/`` (invisible —
 readers only see files listed in committed metadata), then write
 ``v{N+1}.metadata.json`` and atomically swap ``VERSION`` from N to
-N+1 under an O_EXCL lock with a parent-version check — the same
-optimistic pattern as the reference's SELECT FOR UPDATE + requirements
-validation + pointer UPDATE (pg_catalog.cpp:264-325).
+N+1 under the table's ``_commit.lock`` flock with a parent-version
+check — the same optimistic pattern as the reference's SELECT FOR
+UPDATE + requirements validation + pointer UPDATE
+(pg_catalog.cpp:264-325). One lock helper (``_locked``) and one
+fsync'd write-then-rename (``_atomic_write``, which documents the step
+order) carry every metadata write.
 
 Scale posture (100 TB):
 
@@ -76,6 +79,51 @@ from pyspark.sql.types import StructField, StructType
 _META_DIR = "_lakehouse"
 _DATA_DIR = "data"
 _POINTER = "VERSION"
+
+
+@contextlib.contextmanager
+def _locked(path: str):
+    """Hold an exclusive ``flock`` on ``path`` for the block. Opens a
+    fresh descriptor per acquisition: flock locks belong to the open
+    file description, so two acquisitions in one process (two threads,
+    two handles on one table) exclude each other as two processes do."""
+    with open(path, "w") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        yield
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically and durably: write
+    ``path.tmp``, fsync it, rename it over ``path``, fsync the
+    directory. Readers see the old bytes or the new ones, never a torn
+    file. The ``.tmp`` suffix keeps the temp out of the
+    ``v*.metadata.json`` glob that version allocation and the CDC
+    source tail.
+
+    Every metadata write goes through here. A snapshot commit makes
+    its writes in this order, under the table's commit lock:
+
+    1. the delta manifest segment (segmented tables only);
+    2. ``v{N}.metadata.json``;
+    3. the head swap: ``VERSION`` for main, ``_refs.json`` for a
+       branch (``LakeTable._restore_head``).
+
+    The rename in step 3 is the linearization point. Before it every
+    reader resolves the old head; after it, the new one. A crash before
+    it leaves only unreferenced files (a segment, a metadata file that
+    burns version N, a ``*.tmp``), which ``vacuum`` removes."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dir_fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+
 
 # --- manifest segmentation (Iceberg manifest-file analog) -----------
 # Past _MANIFEST_INLINE_MAX files, a snapshot's file list is no longer
@@ -666,6 +714,11 @@ class LakeTable:
     def _pointer_path(self) -> str:
         return os.path.join(self.meta_dir, _POINTER)
 
+    def _commit_lock(self):
+        """The table's commit lock: every metadata write of every ref
+        (main, branches, tags) happens under it."""
+        return _locked(os.path.join(self.meta_dir, "_commit.lock"))
+
     def current_version(self) -> int:
         """Head version of THIS handle's ref — the pointer file for
         main, the branch ref otherwise."""
@@ -714,38 +767,30 @@ class LakeTable:
     def branches(self) -> dict[str, int]:
         return self._load_refs()[1]
 
-    def _write_refs(self, tags: dict, branches: dict | None = None) -> None:
-        if branches is None:  # legacy single-arg call sites
-            branches = self._load_refs()[1]
-        tmp = self._refs_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"__format__": 2, "tags": tags, "branches": branches}, f
-            )
-        os.replace(tmp, self._refs_path())
+    def _write_refs(self, tags: dict, branches: dict) -> None:
+        _atomic_write(
+            self._refs_path(),
+            json.dumps({"__format__": 2, "tags": tags, "branches": branches}),
+        )
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin a snapshot under a stable name (`VERSION AS OF 'name'`
         reads; expiry never drops a tagged snapshot)."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             v = self.current_version() if version is None else version
             self.snapshot(v)  # must exist
-            refs = self.tags()
-            refs[name] = v
-            self._write_refs(refs)
+            tags, branches = self._load_refs()
+            tags[name] = v
+            self._write_refs(tags, branches)
             return v
 
     def drop_tag(self, name: str) -> None:
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            refs = self.tags()
-            if name not in refs:
+        with self._commit_lock():
+            tags, branches = self._load_refs()
+            if name not in tags:
                 raise LakehouseError(f"no such tag: {name!r}")
-            del refs[name]
-            self._write_refs(refs)
+            del tags[name]
+            self._write_refs(tags, branches)
 
     def _resolve_version(self, version) -> int:
         if isinstance(version, str):
@@ -777,9 +822,7 @@ class LakeTable:
     def create_branch(self, name: str, at: int | str | None = None) -> int:
         """Fork a writable branch at a snapshot (default: current
         main head). Metadata-only — no data is copied."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             tags, branches = self._load_refs()
             if name == "main" or name in branches or name in tags:
                 raise LakehouseError(f"ref already exists: {name!r}")
@@ -794,9 +837,7 @@ class LakeTable:
             return v
 
     def drop_branch(self, name: str) -> None:
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             tags, branches = self._load_refs()
             if name not in branches:
                 raise LakehouseError(f"no such branch: {name!r}")
@@ -817,15 +858,13 @@ class LakeTable:
         — legal only when main is an ancestor of the head (no commits
         landed on main since the fork), which makes the publish a pure
         pointer move, exactly Iceberg's ``fast_forward``."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             tags, branches = self._load_refs()
             if branch not in branches:
                 raise LakehouseError(f"no such branch: {branch!r}")
             head = branches[branch]
-            with open(self._pointer_path()) as f:
-                main_v = int(f.read().strip())
+            main = self.for_branch("main")
+            main_v = main.current_version()
             if main_v != head and main_v not in self._ancestry(head):
                 raise LakehouseError(
                     f"cannot fast-forward: main v{main_v} is not an "
@@ -833,10 +872,7 @@ class LakeTable:
                     "landed on main since the fork (cherry-pick or "
                     "re-branch instead)"
                 )
-            ptr_tmp = self._pointer_path() + ".tmp"
-            with open(ptr_tmp, "w") as f:
-                f.write(str(head))
-            os.replace(ptr_tmp, self._pointer_path())
+            main._restore_head(head)
             return head
 
     def cherry_pick(self, version: int | str) -> Snapshot:
@@ -1115,9 +1151,7 @@ class LakeTable:
         ``schema_meta`` (schema_id / field_ids / schemas /
         next_field_id) is set by the evolve operations; every other
         commit carries the parent's evolution state forward."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             snap = self._prepare_snapshot(
                 base_version, operation, files, schema_json,
                 summary=summary, properties=properties,
@@ -1158,9 +1192,10 @@ class LakeTable:
         } | (schema_meta or {})
         if self.branch != "main":
             summary = (summary or {}) | {"branch": self.branch}
+        version = self._max_version() + 1
         return Snapshot(
-            version=self._max_version() + 1,
-            snapshot_id=self._max_version() + 1,
+            version=version,
+            snapshot_id=version,
             parent=current if current > 0 else None,
             operation=operation,
             timestamp_ms=int(time.time() * 1000),
@@ -1254,10 +1289,7 @@ class LakeTable:
             )
             abs_path = os.path.join(self.meta_dir, rel)
             os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-            tmp = abs_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(delta, f)
-            os.rename(tmp, abs_path)
+            _atomic_write(abs_path, json.dumps(delta))
             _segment_seed(abs_path, delta)
             bounds, seg_sid = _segment_bounds(delta)
             descriptors.append(
@@ -1284,28 +1316,17 @@ class LakeTable:
         return [], descriptors
 
     def _publish(self, snap: Snapshot) -> None:
-        """Write the metadata file, then swap this ref's pointer — the
-        swap IS the commit (ref pg_catalog.cpp:315-325). Caller must
+        """Write the segment and metadata files, then swap this ref's
+        head — the swap IS the commit (ref pg_catalog.cpp:315-325; the
+        step order is documented on ``_atomic_write``). Caller must
         hold the commit lock."""
-        meta_path = self._meta_path(snap.version)
         inline_files, descriptors = self._segment_files(snap)
         snap.manifests = descriptors
         d = dict(snap.__dict__)
         d["files"] = inline_files
         d["manifests"] = descriptors
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(d, f)
-        os.rename(tmp, meta_path)
-        if self.branch != "main":
-            tags, branches = self._load_refs()
-            branches[self.branch] = snap.version
-            self._write_refs(tags, branches)
-            return
-        ptr_tmp = self._pointer_path() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(snap.version))
-        os.replace(ptr_tmp, self._pointer_path())
+        _atomic_write(self._meta_path(snap.version), json.dumps(d))
+        self._restore_head(snap.version)
 
     # ------------------------------------------------------------------
     # write paths
@@ -3770,11 +3791,9 @@ class LakeTable:
         # validations it degrades to validating UNDER the lock once,
         # which guarantees progress on a pathologically busy table at
         # the old cost.
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
         probes = 2
         while True:
-            with open(lock_path, "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
+            with self._commit_lock():
                 head = self.current_version()
                 if head != base and probes <= 0:
                     # last resort: validate while holding the lock
@@ -4712,9 +4731,7 @@ class LakeTable:
         # delete) merge, whose read set is the whole table — discards
         # this attempt and re-executes against the fresh head.
         touched_paths = {f["path"] for f in touched}
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             stale = False
             if self.current_version() != base:
                 try:
@@ -5031,11 +5048,10 @@ class LakeTable:
         analog) additionally protects every snapshot committed at or
         after that timestamp — retention by age AND by count."""
         snaps = self.snapshots()
-        current = self.current_version()
         tags, branches = self._load_refs()
         keep_versions = (
             {s.version for s in snaps[-keep_last:]}
-            | {current}
+            | {self.for_branch("main").current_version()}
             | set(tags.values())  # tagged snapshots are pinned
             | set(branches.values())  # branch heads stay readable
         )
@@ -5053,23 +5069,8 @@ class LakeTable:
                         os.remove(p)
                 expired.append(s.version)
         if expired:
-            # manifest segments referenced only by expired snapshots —
-            # under the commit lock, so a concurrent commit's freshly
-            # written (not yet referenced) segment can't be swept
-            lock_path = os.path.join(self.meta_dir, "_commit.lock")
-            with open(lock_path, "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
-                live_segs = {
-                    m["path"]
-                    for s in self.snapshots()
-                    for m in s.manifests
-                }
-                for p in glob.glob(
-                    os.path.join(self.meta_dir, _MANIFEST_DIR, "*.json")
-                ):
-                    if os.path.relpath(p, self.meta_dir) not in live_segs:
-                        os.remove(p)
-        if expired:
+            # manifest segments referenced only by expired snapshots
+            self._gc_orphan_segments()
             # delete files are inherited forward, so one may still be
             # referenced by a SURVIVING snapshot — GC only unreferenced
             live = {
@@ -5103,17 +5104,14 @@ class LakeTable:
         return removed
 
     def _gc_orphan_segments(self) -> list[str]:
-        """Remove manifest segments referenced by NO snapshot (crashed
-        commits leave them). Under the commit lock so a concurrent
-        commit's freshly written, not-yet-referenced segment can't be
-        swept."""
+        """Remove manifest segments referenced by NO snapshot, and the
+        ``*.tmp`` files of interrupted ``_atomic_write`` calls (crashed
+        commits leave both). Under the commit lock so a concurrent
+        commit's freshly written, not-yet-referenced segment or
+        in-flight temp can't be swept."""
         seg_dir = os.path.join(self.meta_dir, _MANIFEST_DIR)
-        if not os.path.isdir(seg_dir):
-            return []
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
         removed = []
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             live = {
                 m["path"] for s in self.snapshots() for m in s.manifests
             }
@@ -5122,6 +5120,10 @@ class LakeTable:
                 if rel not in live:
                     os.remove(p)
                     removed.append(rel)
+            tmps = glob.glob(os.path.join(self.meta_dir, "*.tmp"))
+            tmps += glob.glob(os.path.join(seg_dir, "*.tmp"))
+            for p in tmps:
+                os.remove(p)
         return removed
 
     def vacuum(self, keep_last: int = 1) -> dict:
@@ -5137,17 +5139,16 @@ class LakeTable:
         }
 
     def _restore_head(self, version: int) -> None:
-        """Point this ref back at ``version`` (transaction rollback
-        path). Caller must hold the commit lock."""
+        """Point this ref's head at ``version``: the pointer file for
+        main, the refs file for a branch. The one head move — commit
+        publish, fast-forward, table creation and transaction publish/
+        rollback all go through it. Caller must hold the commit lock."""
         if self.branch != "main":
             tags, branches = self._load_refs()
             branches[self.branch] = version
             self._write_refs(tags, branches)
             return
-        ptr_tmp = self._pointer_path() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(version))
-        os.replace(ptr_tmp, self._pointer_path())
+        _atomic_write(self._pointer_path(), str(version))
 
 
 class LakeTransaction:
@@ -5291,9 +5292,7 @@ class LakeTransaction:
         view). Every caller (abort, commit-failure path, _replay) has
         the publish locks released, so taking it here cannot deadlock."""
         t: LakeTable = st["table"]
-        lock_path = os.path.join(t.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with t._commit_lock():
             self._cleanup_branch_locked(st, drop_files)
 
     def _cleanup_branch_locked(self, st: dict, drop_files: bool) -> None:
@@ -5416,9 +5415,7 @@ class LakeTransaction:
             if b.current_version() == head_then:
                 continue
             t: LakeTable = st["table"]
-            lock_path = os.path.join(t.meta_dir, "_commit.lock")
-            with open(lock_path, "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
+            with t._commit_lock():
                 cur = b.current_version()
                 keep = set(b._ancestry(head_then))
                 chain = [v for v in b._ancestry(cur) if v not in keep]
@@ -5461,12 +5458,9 @@ class LakeTransaction:
             }
         )
         for attempt in range(self._max_retries + 1):
-            locks = []
-            try:
+            with contextlib.ExitStack() as locks:
                 for p in lock_paths:
-                    fh = open(p, "w")
-                    fcntl.flock(fh, fcntl.LOCK_EX)
-                    locks.append(fh)
+                    locks.enter_context(_locked(p))
                 stale = [
                     st
                     for st in states
@@ -5479,9 +5473,7 @@ class LakeTransaction:
                             f"fork after {attempt} replays"
                         )
                     # release locks before replaying (Spark jobs inside)
-                    for fh in locks:
-                        fh.close()
-                    locks = []
+                    locks.close()
                     for st in stale:
                         self._replay(st)
                     continue
@@ -5503,9 +5495,7 @@ class LakeTransaction:
                             getattr(op, "_verb", "op") for op in st["ops"]
                         ]
                         d["summary"].pop("branch", None)
-                        with open(meta + ".tmp", "w") as f:
-                            json.dump(d, f)
-                        os.replace(meta + ".tmp", meta)
+                        _atomic_write(meta, json.dumps(d))
                         t._restore_head(head_v)  # the publish pointer move
                         published.append((t, st["fork"]))
                         heads.append(Snapshot(**d))
@@ -5516,9 +5506,6 @@ class LakeTransaction:
                     for t, old in reversed(published):
                         t._restore_head(old)
                     raise
-            finally:
-                for fh in locks:
-                    fh.close()
         raise AssertionError("unreachable")
 
     def _cleanup_branch_ref_only(self, st: dict) -> None:
@@ -5710,10 +5697,9 @@ def init_table_at(
         properties=props,
         partition_spec=list(partition_by or []),
     )
-    with open(table._meta_path(1), "w") as f:
-        json.dump(snap.__dict__, f)
-    with open(table._pointer_path(), "w") as f:
-        f.write("1")
+    with table._commit_lock():
+        _atomic_write(table._meta_path(1), json.dumps(snap.__dict__))
+        table._restore_head(1)
     return table
 
 
@@ -5810,10 +5796,7 @@ class LakeCatalog:
         # old name would drop/restart the renamed table's live
         # sequence (r11 judge ADVICE: cross-table interference).
         pfx = f"{namespace}.{name}."
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
-            changed = False
+        with self._edit_doc("sequences") as seqs:
             for s in seqs.values():
                 ob = s.get("owned_by") or ""
                 if ob.startswith(pfx):
@@ -5821,9 +5804,6 @@ class LakeCatalog:
                         f"{new_namespace}.{new_name}."
                         + ob[len(pfx):]
                     )
-                    changed = True
-            if changed:
-                self._write_seqs(seqs)
 
     def transaction(self) -> LakeTransaction:
         """Begin a multi-table atomic transaction (see
@@ -5831,32 +5811,38 @@ class LakeCatalog:
         catalog may participate."""
         return LakeTransaction()
 
+    # -- warehouse-level JSON docs: views, sequences, enum types and
+    # SQL functions. Each is one small file ``_<doc>.json``, read whole
+    # and rewritten whole under its own ``_<doc>.lock`` — the metadata
+    # plane is bytes per entry, never on the data path.
+
+    def _load_doc(self, doc: str) -> dict:
+        path = os.path.join(self.warehouse, f"_{doc}.json")
+        if not os.path.exists(path):
+            return {}
+        with open(path) as f:
+            return json.load(f)
+
+    @contextlib.contextmanager
+    def _edit_doc(self, doc: str):
+        """Locked read-modify-write of one doc: yields its dict and
+        writes it back atomically when the block exits normally. An
+        unchanged doc is not rewritten; a raise writes nothing."""
+        base = os.path.join(self.warehouse, f"_{doc}")
+        with _locked(base + ".lock"):
+            d = self._load_doc(doc)
+            before = json.dumps(d)
+            yield d
+            after = json.dumps(d)
+            if after != before:
+                _atomic_write(base + ".json", after)
+
     # -- views (PG CREATE VIEW parity: the reference's users run plain
     # PG SQL over iceberg_am tables, and views are core PG surface; a
     # view here is stored SQL text expanded at SELECT time by LakeSQL).
-    # Registry = one warehouse-level JSON, lock-guarded like refs; the
-    # metadata plane is bytes per view, never on the data path.
-
-    def _views_path(self) -> str:
-        return os.path.join(self.warehouse, "_views.json")
-
-    def _load_views(self) -> dict:
-        if not os.path.exists(self._views_path()):
-            return {}
-        with open(self._views_path()) as f:
-            return json.load(f)
-
-    def _write_views(self, views: dict) -> None:
-        tmp = self._views_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f)
-        os.replace(tmp, self._views_path())
-
-    def _views_lock(self):
-        return open(os.path.join(self.warehouse, "_views.lock"), "w")
 
     def view_exists(self, namespace: str, name: str) -> bool:
-        return f"{namespace}.{name}" in self._load_views()
+        return f"{namespace}.{name}" in self._load_doc("views")
 
     def create_view(
         self,
@@ -5872,9 +5858,7 @@ class LakeCatalog:
             raise LakehouseError(
                 f"{namespace}.{name} is a table; views cannot shadow tables"
             )
-        with self._views_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            views = self._load_views()
+        with self._edit_doc("views") as views:
             key = f"{namespace}.{name}"
             if key in views and not or_replace:
                 raise LakehouseError(f"view {key} already exists")
@@ -5882,10 +5866,9 @@ class LakeCatalog:
                 "sql": sql_text,
                 "created_ms": int(time.time() * 1000),
             }
-            self._write_views(views)
 
     def view_sql(self, namespace: str, name: str) -> str:
-        views = self._load_views()
+        views = self._load_doc("views")
         key = f"{namespace}.{name}"
         if key not in views:
             raise LakehouseError(f"view {key} does not exist")
@@ -5894,53 +5877,28 @@ class LakeCatalog:
     def drop_view(
         self, namespace: str, name: str, if_exists: bool = False
     ) -> None:
-        with self._views_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            views = self._load_views()
+        with self._edit_doc("views") as views:
             key = f"{namespace}.{name}"
             if key not in views:
                 if if_exists:
                     return
                 raise LakehouseError(f"view {key} does not exist")
             del views[key]
-            self._write_views(views)
 
     def list_views(self, namespace: str | None = None) -> list[tuple[str, str]]:
         out = []
-        for key in sorted(self._load_views()):
+        for key in sorted(self._load_doc("views")):
             ns, name = key.split(".", 1)
             if namespace is None or ns == namespace:
                 out.append((ns, name))
         return out
 
     # -- sequences (PG CREATE SEQUENCE / nextval; ref catalog surface) --
-    # Stored like views: one JSON file + flock. A sequence is driver-
-    # side metadata (PG guarantees uniqueness and per-session
-    # monotonicity, NOT gaplessness), so a block reservation is the
-    # scale posture: nextval(n) advances by n*increment in ONE locked
-    # read-modify-write regardless of how many values the statement
-    # consumes.
-
-    def _seqs_path(self) -> str:
-        return os.path.join(self.warehouse, "_sequences.json")
-
-    def _load_seqs(self) -> dict:
-        if not os.path.exists(self._seqs_path()):
-            return {}
-        with open(self._seqs_path()) as f:
-            return json.load(f)
-
-    def _write_seqs(self, seqs: dict) -> None:
-        tmp = self._seqs_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(seqs, f)
-        os.replace(tmp, self._seqs_path())
-
-    def _seqs_lock(self):
-        return open(os.path.join(self.warehouse, "_sequences.lock"), "w")
-
-    def sequence_exists(self, namespace: str, name: str) -> bool:
-        return f"{namespace}.{name}" in self._load_seqs()
+    # A sequence is driver-side metadata (PG guarantees uniqueness and
+    # per-session monotonicity, NOT gaplessness), so a block
+    # reservation is the scale posture: nextval(n) advances by
+    # n*increment in ONE locked read-modify-write regardless of how
+    # many values the statement consumes.
 
     def create_sequence(
         self, namespace: str, name: str, start: int = 1,
@@ -5952,9 +5910,7 @@ class LakeCatalog:
         RESTART IDENTITY restarts them."""
         if increment == 0:
             raise LakehouseError("INCREMENT must not be zero")
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._edit_doc("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key in seqs:
                 if if_not_exists:
@@ -5965,14 +5921,13 @@ class LakeCatalog:
                 "start": start,
                 **({"owned_by": owned_by} if owned_by else {}),
             }
-            self._write_seqs(seqs)
 
     def list_sequences_meta(self) -> list[tuple[str, str, dict]]:
         """(namespace, name, state) per sequence — the reflection
         surface (pg_sequences / information_schema.sequences)."""
         return [
             (*key.split(".", 1), dict(s))
-            for key, s in sorted(self._load_seqs().items())
+            for key, s in sorted(self._load_doc("sequences").items())
         ]
 
     def sequences_owned_by(
@@ -5981,7 +5936,7 @@ class LakeCatalog:
         pfx = f"{namespace}.{table}."
         return [
             tuple(k.split(".", 1))
-            for k, s in self._load_seqs().items()
+            for k, s in self._load_doc("sequences").items()
             if (s.get("owned_by") or "").startswith(pfx)
         ]
 
@@ -5991,39 +5946,31 @@ class LakeCatalog:
         """ALTER SEQUENCE RESTART [WITH n] / TRUNCATE RESTART
         IDENTITY: next value becomes ``value`` (default: the
         sequence's START)."""
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._edit_doc("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 raise LakehouseError(f"sequence {key} does not exist")
             s = seqs[key]
             s["next"] = s.get("start", 1) if value is None else value
             s["called"] = False
-            self._write_seqs(seqs)
 
     def drop_sequence(
         self, namespace: str, name: str, if_exists: bool = False
     ) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._edit_doc("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 if if_exists:
                     return
                 raise LakehouseError(f"sequence {key} does not exist")
             del seqs[key]
-            self._write_seqs(seqs)
 
     def sequence_nextval(
         self, namespace: str, name: str, n: int = 1
     ) -> int:
         """Reserve ``n`` consecutive values; returns the FIRST. One
         locked read-modify-write per statement, not per row."""
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._edit_doc("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 raise LakehouseError(f"sequence {key} does not exist")
@@ -6031,30 +5978,26 @@ class LakeCatalog:
             first = s["next"]
             s["next"] = first + n * s["increment"]
             s["called"] = True
-            self._write_seqs(seqs)
-            return first
+        return first
 
     def sequence_setval(
         self, namespace: str, name: str, value: int,
         is_called: bool = True,
     ) -> int:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._edit_doc("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 raise LakehouseError(f"sequence {key} does not exist")
             s = seqs[key]
             s["next"] = value + s["increment"] if is_called else value
             s["called"] = is_called
-            self._write_seqs(seqs)
-            return value
+        return value
 
     def list_sequences(
         self, namespace: str | None = None
     ) -> list[tuple[str, str]]:
         out = []
-        for key in sorted(self._load_seqs()):
+        for key in sorted(self._load_doc("sequences")):
             ns, name = key.split(".", 1)
             if namespace is None or ns == namespace:
                 out.append((ns, name))
@@ -6062,84 +6005,46 @@ class LakeCatalog:
 
     # -- enum types (PG CREATE TYPE ... AS ENUM) -----------------------
 
-    def _types_path(self) -> str:
-        return os.path.join(self.warehouse, "_types.json")
-
-    def _load_types(self) -> dict:
-        if not os.path.exists(self._types_path()):
-            return {}
-        with open(self._types_path()) as f:
-            return json.load(f)
-
     def create_enum_type(
         self, name: str, labels: list[str],
         if_not_exists: bool = False,
     ) -> None:
-        with self._seqs_lock() as lock:  # shared aux lock is fine
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            types = self._load_types()
+        with self._edit_doc("types") as types:
             if name in types:
                 if if_not_exists:
                     return
                 raise LakehouseError(f"type {name!r} already exists")
             types[name] = labels
-            tmp = self._types_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(types, f)
-            os.replace(tmp, self._types_path())
 
     def drop_enum_type(self, name: str, if_exists: bool = False) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            types = self._load_types()
+        with self._edit_doc("types") as types:
             if name not in types:
                 if if_exists:
                     return
                 raise LakehouseError(f"type {name!r} does not exist")
             del types[name]
-            tmp = self._types_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(types, f)
-            os.replace(tmp, self._types_path())
 
     def enum_labels(self, name: str) -> list[str] | None:
-        return self._load_types().get(name)
+        return self._load_doc("types").get(name)
 
     # -- SQL functions (PG CREATE FUNCTION ... LANGUAGE SQL; the
     # single-expression subset macro-expands at call sites, r10)
-
-    def _funcs_path(self) -> str:
-        return os.path.join(self.warehouse, "_funcs.json")
-
-    def _load_funcs(self) -> dict:
-        if not os.path.exists(self._funcs_path()):
-            return {}
-        with open(self._funcs_path()) as f:
-            return json.load(f)
 
     def create_sql_function(
         self, name: str, params: list[str], body: str,
         replace: bool = False,
     ) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            funcs = self._load_funcs()
+        with self._edit_doc("funcs") as funcs:
             if name in funcs and not replace:
                 raise LakehouseError(
                     f"function {name!r} already exists"
                 )
             funcs[name] = {"params": params, "body": body}
-            tmp = self._funcs_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(funcs, f)
-            os.replace(tmp, self._funcs_path())
 
     def drop_sql_function(
         self, name: str, if_exists: bool = False
     ) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            funcs = self._load_funcs()
+        with self._edit_doc("funcs") as funcs:
             if name not in funcs:
                 if if_exists:
                     return
@@ -6147,13 +6052,9 @@ class LakeCatalog:
                     f"function {name!r} does not exist"
                 )
             del funcs[name]
-            tmp = self._funcs_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(funcs, f)
-            os.replace(tmp, self._funcs_path())
 
     def sql_functions(self) -> dict:
-        return self._load_funcs()
+        return self._load_doc("funcs")
 
     # -- namespaces (PG CREATE/DROP SCHEMA; ref maps PG schema ≡
     # Iceberg namespace, catalog/pg_catalog.h:29)

@@ -6,11 +6,11 @@ The hypertable-rollup companion (Timescale ``time_bucket_gapfill`` /
 series — every bucket in the query range exists for every series —
 with configurable fills per metric.
 
-Scale posture: the bucket grid is ``distinct series × sequence(min,
-max)`` — metadata-sized relative to the fact table (series count ×
-range/step), built with one two-row-aggregate broadcast and one
-explode, never a driver loop. Fills are per-series ordered windows:
-one shuffle on the series key. No reference citation — the reference
+Scale posture: missing buckets come from ``lead()`` per series — each
+row explodes the buckets between it and its successor — so there is
+no dense grid and no join; the only driver round-trip is one
+two-scalar bounds aggregate. Fills are per-series ordered windows in
+the same series-keyed pass. No reference citation — the reference
 has no time-series surface; this extends the Tier-C north star.
 """
 
