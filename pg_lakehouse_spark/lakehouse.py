@@ -62,6 +62,7 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
+import functools
 import glob
 import json
 import os
@@ -3143,7 +3144,7 @@ class LakeTable:
     def lineage_scan(self) -> DataFrame:
         """Current-snapshot scan with ``__file``/``__pos`` row-identity
         columns appended (existing deletes applied) — the frame a
-        caller filters to hand ``_mor_positional_dml`` a pre-computed
+        caller filters to hand positional ``_mor_dml`` a pre-computed
         match set (r9 subquery-DML path)."""
         s = self.snapshot()
         return self._read_entries(s, s.files, with_lineage=True)
@@ -3521,16 +3522,23 @@ class LakeTable:
     # callbacks but never implemented them: iceberg_am.c:141-159)
     # ------------------------------------------------------------------
 
-    def _stage_changes(self, df: DataFrame, snapshot_hint: int) -> list[str]:
-        """Write a change-feed frame (rows + ``_change_type``) as
-        parquet under ``_changes/``; returns relative paths. Written
-        BEFORE the commit (invisible unless the commit lists them) —
-        same staging discipline as data files."""
+    def _stage_changes(
+        self, frames: list[DataFrame], snapshot_hint: int
+    ) -> list[str]:
+        """Write change-feed frames (rows + ``_change_type``), unioned
+        by name, as parquet under ``_changes/``; returns relative
+        paths (none for no frames). Written BEFORE the commit
+        (invisible unless the commit lists them) — same staging
+        discipline as data files."""
+        if not frames:
+            return []
         changes_dir = os.path.join(self.location, "_changes")
         staging = os.path.join(
             self.location, f"_staging-chg-{snapshot_hint}-{uuid.uuid4().hex[:8]}"
         )
-        df.write.mode("overwrite").parquet(staging)
+        functools.reduce(DataFrame.unionByName, frames).write.mode(
+            "overwrite"
+        ).parquet(staging)
         os.makedirs(changes_dir, exist_ok=True)
         rels = []
         for i, src in enumerate(
@@ -3730,26 +3738,26 @@ class LakeTable:
         v = self.snapshot().properties.get("change_data_feed", "false")
         return str(v).lower() in ("true", "on", "1")
 
-    def _rewrite(
-        self, operation: str, condition: Column, transform, changes=None,
-        retries: int = 5,
+    def _reexecute(
+        self, operation: str, attempt, retries: int = 5
     ) -> Snapshot:
-        # Optimistic concurrency (ref A10's retry/re-base posture;
-        # Iceberg row-delta semantics), two tiers per conflict:
-        # 1. REBASE — the concurrent commit left our rewritten files
-        #    alone and added no rows matching the predicate: our read
-        #    set is intact, re-point keep at the new head and recommit.
-        # 2. RE-EXECUTE — our read set changed (files rewritten by
-        #    compaction/another DML, matching rows appended, schema or
-        #    delete files moved): discard the staged output and run the
-        #    whole statement against the fresh head — equivalent to the
-        #    statement having started after the conflicting commit,
-        #    which is exactly serializable re-execution.
+        """Run a copy-on-write DML ``attempt`` until it commits.
+        Optimistic concurrency (ref A10's retry/re-base posture;
+        Iceberg row-delta semantics), two tiers per conflict:
+        1. REBASE — inside the attempt (`_publish_rewrite`): the
+           concurrent commit left our rewritten files alone and added
+           no rows the statement would read; re-point the carried
+           files at the new head and recommit.
+        2. RE-EXECUTE — here: our read set changed (files rewritten by
+           compaction/another DML, matching rows appended, schema or
+           delete files moved), so the attempt discarded its staged
+           output and raised `_StaleRewrite`; run the whole statement
+           again against the fresh head — equivalent to it having
+           started after the conflicting commit, which is exactly
+           serializable re-execution."""
         while True:
             try:
-                return self._rewrite_once(
-                    operation, condition, transform, changes
-                )
+                return attempt()
             except _StaleRewrite:
                 if retries <= 0:
                     raise CommitConflict(
@@ -3757,6 +3765,16 @@ class LakeTable:
                         "commits (retries exhausted)"
                     )
                 retries -= 1
+
+    def _rewrite(
+        self, operation: str, condition: Column, transform, changes=None
+    ) -> Snapshot:
+        return self._reexecute(
+            operation,
+            lambda: self._rewrite_once(
+                operation, condition, transform, changes
+            ),
+        )
 
     def _rewrite_once(
         self, operation: str, condition: Column, transform, changes
@@ -3766,7 +3784,6 @@ class LakeTable:
         affected = set(self._affected_files(condition))
         if not affected:
             return snap  # no-op: nothing matched
-        keep = [f for f in snap.files if f["path"] not in affected]
         touched_entries = [f for f in snap.files if f["path"] in affected]
         touched = self._read_entries(snap, touched_entries)
         rewritten = transform(touched)
@@ -3781,41 +3798,74 @@ class LakeTable:
         change_files = (
             self._stage_changes(changes(touched), base + 1) if feed else []
         )
-        # Validate-and-publish: the rebase validation includes a Spark
-        # job (predicate probe over concurrently-added files), so it
-        # runs OUTSIDE the commit lock — holding the exclusive flock
-        # through a scan would stall every other writer on the table
-        # (r5 ADVICE). The loop re-acquires the lock after each probe;
-        # if yet another commit landed meanwhile, it re-validates the
-        # (incremental) delta. Bounded: after `probes` free-running
-        # validations it degrades to validating UNDER the lock once,
-        # which guarantees progress on a pathologically busy table at
-        # the old cost.
+        summary = {
+            "rewritten_files": len(affected),
+            "added_files": len(new_files),
+        } | ({"change_feed": "exact"} if feed else {})
+        return self._publish_rewrite(
+            operation, snap, affected, condition, new_files, change_files,
+            lambda keep: summary,
+        )
+
+    def _publish_rewrite(
+        self,
+        operation: str,
+        snap: Snapshot,
+        affected: set[str],
+        condition: Column | None,
+        new_files: list[dict],
+        change_files: list[str],
+        summary,
+        rebase_rule=None,
+    ) -> Snapshot:
+        """Validate-and-publish a copy-on-write rewrite staged against
+        ``snap``: replace the ``affected`` files with ``new_files`` at
+        the head, rebasing over concurrent commits that
+        `_validate_dml_rebase` (plus the caller's ``rebase_rule(old,
+        cur)``, which raises :class:`CommitConflict` to refuse) deems
+        harmless. ``summary(keep)`` builds the snapshot summary from
+        the files carried over at the head it commits on. A refused
+        rebase discards the staged files and raises `_StaleRewrite`
+        for `_reexecute`.
+
+        The rebase validation may include a Spark job (predicate probe
+        over concurrently-added files), so it runs OUTSIDE the commit
+        lock — holding the exclusive flock through a scan would stall
+        every other writer on the table (r5 ADVICE). The loop
+        re-acquires the lock after each probe; if yet another commit
+        landed meanwhile, it re-validates the (incremental) delta.
+        Bounded: after `probes` free-running validations it degrades
+        to validating UNDER the lock once, which guarantees progress on
+        a pathologically busy table at the old cost."""
+
+        def rebase(old: Snapshot) -> Snapshot:
+            try:
+                cur = self._validate_dml_rebase(old, affected, condition)
+                if rebase_rule is not None:
+                    rebase_rule(old, cur)
+            except CommitConflict:
+                # read set changed — drop this attempt's staged files
+                # (they'd be orphans) and re-execute
+                self._discard_staged(new_files, change_files)
+                raise _StaleRewrite() from None
+            return cur
+
         probes = 2
         while True:
             with self._commit_lock():
                 head = self.current_version()
-                if head != base and probes <= 0:
+                if head != snap.version and probes <= 0:
                     # last resort: validate while holding the lock
-                    try:
-                        snap = self._validate_dml_rebase(
-                            snap, affected, condition
-                        )
-                    except CommitConflict:
-                        self._discard_staged(new_files, change_files)
-                        raise _StaleRewrite() from None
-                    base = snap.version
+                    snap = rebase(snap)
+                    head = snap.version
+                if head == snap.version:
                     keep = [
                         f for f in snap.files if f["path"] not in affected
                     ]
-                    head = base
-                if head == base:
                     final = keep + new_files
                     out = self._prepare_snapshot(
-                        base, operation, final, snap.schema_json,
-                        summary={"rewritten_files": len(affected),
-                                 "added_files": len(new_files)}
-                        | ({"change_feed": "exact"} if feed else {}),
+                        snap.version, operation, final, snap.schema_json,
+                        summary=summary(keep),
                         change_files=change_files,
                         delete_files=self._live_deletes(
                             snap.delete_files, final
@@ -3828,25 +3878,17 @@ class LakeTable:
             # to each validated head, so the next pass scans only files
             # added since.
             probes -= 1
-            try:
-                snap = self._validate_dml_rebase(snap, affected, condition)
-            except CommitConflict:
-                # read set changed — drop this attempt's staged files
-                # (they'd be orphans) and re-execute
-                self._discard_staged(new_files, change_files)
-                raise _StaleRewrite() from None
-            base = snap.version
-            keep = [f for f in snap.files if f["path"] not in affected]
+            snap = rebase(snap)
 
-    def _discard_staged(self, new_files, change_files) -> None:
-        """Remove a lost DML attempt's staged data/change parquet so a
-        conflict-heavy table doesn't accumulate orphans until vacuum."""
-        for e in new_files:
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.location, e["path"]))
-        for p in change_files:
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.location, p))
+    def _discard_staged(self, new_files: list[dict], paths: list) -> None:
+        """Remove a lost DML attempt's staged data files and the other
+        staged files at relative ``paths`` (change files, a delete
+        file; ``None`` entries skip), so a conflict-heavy table doesn't
+        accumulate orphans until vacuum."""
+        for p in [e["path"] for e in new_files] + paths:
+            if p is not None:
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(self.location, p))
 
     def _validate_dml_rebase(
         self, snap: Snapshot, affected: set[str], condition
@@ -3931,83 +3973,52 @@ class LakeTable:
         self,
         operation: str,
         condition: Column | None,
+        mode: str,
         postimage=None,
         matched: DataFrame | None = None,
     ) -> Snapshot:
-        """Merge-on-read DML (Iceberg v2 equality deletes; the
-        reference's merge-on-read intent, pg_lakehouse_iceberg/
-        README.md:15): write the matched rows' KEYS as a delete file —
-        O(matches), never a data-file rewrite — plus, for UPDATE, the
-        postimage rows as ordinary appends. The new data files carry a
-        HIGHER sequence number than the delete, so they are exempt
-        from it (Iceberg's sequence-number rule). ``matched`` (r9)
-        lets a caller supply the match frame directly — the subquery
-        DML path computes it through the SQL frontend, where the
-        predicate is not expressible as a Column."""
+        """Merge-on-read DELETE/UPDATE (Iceberg v2 row-level deletes;
+        the reference's merge-on-read intent, pg_lakehouse_iceberg/
+        README.md:15): the matched rows retire through a delete file —
+        O(matches), never a data-file rewrite — and, for UPDATE,
+        ``postimage(matched rows)`` lands as ordinary appends.
+        ``mode`` is the resolved `_delete_mode`: ``'mor'`` retires rows
+        by their ``row_key`` columns (equality deletes), ``'mor-pos'``
+        by (file name, row index) (position deletes — no ``row_key``
+        property needed, so it works on tables with no identifier
+        columns; the scan must discover the positions). ``matched``
+        (r9) lets a caller supply the match frame directly — the
+        subquery DML path computes it through the SQL frontend, where
+        the predicate is not expressible as a Column; in positional
+        mode it carries ``__file``/``__pos`` (from ``lineage_scan()``).
+        """
         base = self.current_version()
         snap = self.snapshot(base)
-        key_cols = self._row_key(snap)
-        ids, _ = self._effective_field_ids(snap)
+        positional = mode == "mor-pos"
+        ident = ["__file", "__pos"] if positional else self._row_key(snap)
         if matched is None:
             # manifest-range/bloom shortlist before the match scan —
             # the same pruning the CoW probe gets (r14, VERDICT #6): a
             # keyed MoR DELETE/UPDATE opens the candidate slice, not
-            # the table. Deletes still apply (live rows only).
+            # the table (keys and positions of matches live only
+            # there). Deletes still apply (live rows only).
             matched = self._read_entries(
-                snap, self._shortlist_by_condition(snap, condition)
+                snap,
+                self._shortlist_by_condition(snap, condition),
+                with_lineage=positional,
             ).filter(condition)
-        rel, rows = self._stage_delete_file(
-            matched.select(*key_cols).distinct(), base + 1
-        )
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-            return snap  # no-op: nothing matched
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "key_names": key_cols,
-            "key_ids": [ids[c] for c in key_cols],
-            "seq": base + 1,
-        }
-        new_files = []
-        change_parts = []
-        feed = self.change_feed_enabled()
-        if postimage is not None:
-            post = self._align_to_schema(postimage(matched))
-            new_files = self._stage_dataframe(
-                post, base + 1, snap.partition_spec,
-                schema_id=snap.schema_id,
-            )
-            if feed:
-                change_parts = [
-                    matched.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ),
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    ),
+        rows = matched.drop("__file", "__pos") if positional else matched
+        post = postimage(rows) if postimage is not None else None
+        return self._mor_commit(
+            operation, base, snap, matched.select(*ident), post=post,
+            changes=lambda: (
+                [_change(rows, "delete")]
+                if post is None
+                else [
+                    _change(rows, "update_preimage"),
+                    _change(post, "update_postimage"),
                 ]
-        elif feed:
-            change_parts = [
-                matched.withColumn("_change_type", F.lit("delete"))
-            ]
-        change_files = []
-        if change_parts:
-            chg = change_parts[0]
-            for p in change_parts[1:]:
-                chg = chg.unionByName(p)
-            change_files = self._stage_changes(chg, base + 1)
-        return self._commit(
-            base, operation, snap.files + new_files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read",
-                "delete_keys": rows,
-                "added_files": len(new_files),
-            }
-            | ({"change_feed": "exact"} if feed else {}),
-            change_files=change_files,
-            delete_files=snap.delete_files + [entry],
+            ),
         )
 
     def delete_by_keys(self, keys: DataFrame) -> Snapshot:
@@ -4024,123 +4035,110 @@ class LakeTable:
         base = self.current_version()
         snap = self.snapshot(base)
         key_cols = self._row_key(snap)
-        ids, _ = self._effective_field_ids(snap)
-        rel, rows = self._stage_delete_file(
-            keys.select(*key_cols).distinct(), base + 1
-        )
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-            return snap  # no-op: empty key frame
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "key_names": key_cols,
-            "key_ids": [ids[c] for c in key_cols],
-            "seq": base + 1,
-        }
-        change_files = []
-        feed = self.change_feed_enabled()
-        if feed:
-            matched = self.read().join(
-                keys.select(*key_cols).distinct(), on=key_cols, how="semi"
-            )
-            change_files = self._stage_changes(
-                matched.withColumn("_change_type", F.lit("delete")),
-                base + 1,
-            )
-        return self._commit(
-            base, "delete", snap.files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read",
-                "delete_keys": rows,
-                "added_files": 0,
-            }
-            | ({"change_feed": "exact"} if feed else {}),
-            change_files=change_files,
-            delete_files=snap.delete_files + [entry],
+        keys = keys.select(*key_cols)
+        return self._mor_commit(
+            "delete", base, snap, keys,
+            changes=lambda: [
+                _change(
+                    self.read().join(
+                        keys.distinct(), on=key_cols, how="semi"
+                    ),
+                    "delete",
+                )
+            ],
         )
 
-    def _mor_positional_dml(
+    def _mor_commit(
         self,
         operation: str,
-        condition: Column | None,
-        postimage=None,
-        matched: DataFrame | None = None,
+        base: int,
+        snap: Snapshot,
+        retired: DataFrame,
+        post: DataFrame | None = None,
+        inserts: DataFrame | None = None,
+        changes=None,
+        summary_extra: dict | None = None,
     ) -> Snapshot:
-        """Merge-on-read DML via POSITION deletes (Iceberg v2's second
-        delete type): matched rows are recorded as (file name, row
-        index) — no ``row_key`` table property needed, which is the
-        point: positional MoR works on tables with no identifier
-        columns. Costs one scan to find the rows (inherent — the
-        positions must be discovered) and writes O(matches).
-        ``matched`` (r9) supplies a pre-computed match frame carrying
-        ``__file``/``__pos`` (from ``lineage_scan()``) for predicates
-        the Column algebra can't express (subquery DML)."""
-        base = self.current_version()
-        snap = self.snapshot(base)
-        if matched is None:
-            # manifest shortlist before the position-discovery scan
-            # (r14, VERDICT #6) — positions are per-file, so skipping
-            # non-overlapping files cannot lose a match
-            scan = self._read_entries(
-                snap,
-                self._shortlist_by_condition(snap, condition),
-                with_lineage=True,
-            )
-            matched = scan.filter(condition)
-        rel, rows = self._stage_delete_file(
-            matched.select("__file", "__pos").distinct(), base + 1
-        )
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-            return snap  # no-op: nothing matched
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "kind": "position",
-            "seq": base + 1,
-        }
-        matched_rows = matched.drop("__file", "__pos")
+        """The one merge-on-read commit path (DELETE, UPDATE, MERGE,
+        ``delete_by_keys``). ``retired`` identifies the rows to retire:
+        ``row_key`` columns (an equality-delete file) or
+        ``__file``/``__pos`` (a position-delete file). ``post`` holds
+        the retired rows' postimages and ``inserts`` the new rows;
+        both append as data files carrying a HIGHER sequence number
+        than the delete, so they are exempt from it (Iceberg's
+        sequence-number rule). ``changes()`` returns the change-feed
+        frames, built and staged only when the feed is on. Staging
+        that loses the commit race is removed before the
+        :class:`CommitConflict` propagates."""
+        positional = retired.columns == ["__file", "__pos"]
+        rel, rows = self._stage_delete_file(retired.distinct(), base + 1)
+        if not rows:
+            self._discard_staged([], [rel])
+        # postimages derive from retired rows: none retired, none added
+        added = [f for f in (post if rows else None, inserts) if f is not None]
         new_files = []
-        change_parts = []
-        feed = self.change_feed_enabled()
-        if postimage is not None:
-            post = self._align_to_schema(postimage(matched_rows))
+        if added:
             new_files = self._stage_dataframe(
-                post, base + 1, snap.partition_spec,
-                schema_id=snap.schema_id,
+                self._align_to_schema(
+                    functools.reduce(DataFrame.unionByName, added)
+                ),
+                base + 1, snap.partition_spec, schema_id=snap.schema_id,
             )
-            if feed:
-                change_parts = [
-                    matched_rows.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ),
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    ),
+        if not rows and not new_files:
+            return snap  # no-op: nothing matched
+        feed = changes is not None and self.change_feed_enabled()
+        change_files = self._stage_changes(changes(), base + 1) if feed else []
+        delete_files = snap.delete_files
+        if rows:
+            entry = {"path": rel, "rows": rows, "seq": base + 1}
+            if positional:
+                entry["kind"] = "position"
+            else:
+                ids, _ = self._effective_field_ids(snap)
+                entry["key_names"] = retired.columns
+                entry["key_ids"] = [ids[c] for c in retired.columns]
+            delete_files = delete_files + [entry]
+        summary = (
+            {"delete_mode": "merge-on-read-positional",
+             "delete_positions": rows}
+            if positional
+            else {"delete_mode": "merge-on-read", "delete_keys": rows}
+        ) | {"added_files": len(new_files)}
+        try:
+            return self._commit(
+                base, operation, snap.files + new_files, snap.schema_json,
+                summary=summary
+                | ({"change_feed": "exact"} if feed else {})
+                | (summary_extra or {}),
+                change_files=change_files,
+                delete_files=delete_files,
+            )
+        except CommitConflict:
+            self._discard_staged(
+                new_files, change_files + ([rel] if rows else [])
+            )
+            raise
+
+    def _postimage(
+        self,
+        rows: DataFrame,
+        assignments: dict[str, Column],
+        cols: list[str] | None = None,
+    ) -> DataFrame:
+        """UPDATE/MERGE postimages: each of ``cols`` (default: every
+        column of ``rows``) takes its assignment or passes through,
+        then aligns to the table schema (``_align_to_schema``, the PG
+        assignment cast). Merge-on-read stages this frame and every
+        change feed records it, so the feed's postimage is the stored
+        row — same values, same types."""
+        return self._align_to_schema(
+            rows.select(
+                *[
+                    assignments[c].alias(c) if c in assignments
+                    else F.col(c)
+                    for c in cols or rows.columns
                 ]
-        elif feed:
-            change_parts = [
-                matched_rows.withColumn("_change_type", F.lit("delete"))
-            ]
-        change_files = []
-        if change_parts:
-            chg = change_parts[0]
-            for c in change_parts[1:]:
-                chg = chg.unionByName(c)
-            change_files = self._stage_changes(chg, base + 1)
-        return self._commit(
-            base, operation, snap.files + new_files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read-positional",
-                "delete_positions": rows,
-                "added_files": len(new_files),
-            }
-            | ({"change_feed": "exact"} if feed else {}),
-            change_files=change_files,
-            delete_files=snap.delete_files + [entry],
+            )
         )
 
     def delete(self, condition: Column, mode: str | None = None) -> Snapshot:
@@ -4150,16 +4148,12 @@ class LakeTable:
         key file; ``'merge-on-read-positional'`` writes (file, row
         index) position deletes — no row_key property required."""
         dm = self._delete_mode(mode)
-        if dm == "mor":
-            return self._mor_dml("delete", condition)
-        if dm == "mor-pos":
-            return self._mor_positional_dml("delete", condition)
+        if dm != "cow":
+            return self._mor_dml("delete", condition, dm)
         return self._rewrite(
             "delete", condition,
             lambda df: df.filter(~condition),
-            changes=lambda df: df.filter(condition).withColumn(
-                "_change_type", F.lit("delete")
-            ),
+            changes=lambda df: [_change(df.filter(condition), "delete")],
         )
 
     def update(
@@ -4169,7 +4163,7 @@ class LakeTable:
         mode: str | None = None,
     ) -> Snapshot:
         """UPDATE t SET col=expr WHERE ... (ref A13). Merge-on-read
-        mode writes a delete-key file + postimage appends (no data-file
+        mode writes a delete file + postimage appends (no data-file
         rewrite); the postimages' higher sequence number exempts them
         from the delete. Post-image frames align to the table schema
         (``_align_to_schema``, the PG assignment cast) — without it a
@@ -4185,18 +4179,10 @@ class LakeTable:
                 f"UPDATE assigns to unknown column(s): {bad}"
             )
         dm = self._delete_mode(mode)
-        if dm in ("mor", "mor-pos"):
-            postimage = lambda m: m.select(  # noqa: E731
-                *[
-                    assignments[c].alias(c) if c in assignments
-                    else F.col(c)
-                    for c in m.columns
-                ]
-            )
-            if dm == "mor":
-                return self._mor_dml("update", condition, postimage=postimage)
-            return self._mor_positional_dml(
-                "update", condition, postimage=postimage
+        if dm != "cow":
+            return self._mor_dml(
+                "update", condition, dm,
+                postimage=lambda m: self._postimage(m, assignments),
             )
 
         def transform(df: DataFrame) -> DataFrame:
@@ -4221,19 +4207,12 @@ class LakeTable:
                 marked, only=F.col("__modified")
             ).drop("__modified")
 
-        def changes(df: DataFrame) -> DataFrame:
+        def changes(df: DataFrame) -> list[DataFrame]:
             pre = df.filter(condition)
-            post = pre.select(
-                *[
-                    assignments[c].alias(c) if c in assignments else F.col(c)
-                    for c in df.columns
-                ]
-            )
-            return pre.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
+            return [
+                _change(pre, "update_preimage"),
+                _change(self._postimage(pre, assignments), "update_postimage"),
+            ]
 
         return self._rewrite("update", condition, transform, changes=changes)
 
@@ -4292,8 +4271,8 @@ class LakeTable:
         base = self.current_version()
         snap = self.snapshot(base)
         key_cols = self._row_key(snap)
-        ids, _ = self._effective_field_ids(snap)
         target = self.read()
+        tcols = target.columns
         src = source.select(
             F.struct(*[F.col(c) for c in source.columns]).alias("__src"),
             *[F.col(c).alias(f"__k_{c}") for c in on],
@@ -4322,26 +4301,16 @@ class LakeTable:
                 )
             retire_parts.append(unmatched.select(*key_cols))
         retire = (
-            retire_parts[0]
+            functools.reduce(DataFrame.unionByName, retire_parts)
             if retire_parts
             else target.select(*key_cols).limit(0)
         )
-        for p in retire_parts[1:]:
-            retire = retire.unionByName(p)
-        rel, rows = self._stage_delete_file(retire.distinct(), base + 1)
-        new_parts = []
-        tcols = target.columns
-        if when_matched_update:
-            new_parts.append(
-                matched.select(
-                    *[
-                        when_matched_update[c].alias(c)
-                        if c in when_matched_update
-                        else F.col(c)
-                        for c in tcols
-                    ]
-                )
-            )
+        post = (
+            self._postimage(matched, when_matched_update, tcols)
+            if when_matched_update
+            else None
+        )
+        inserts = None
         if when_not_matched_insert:
             ins_frame = src.join(
                 target.select(
@@ -4355,83 +4324,26 @@ class LakeTable:
             ins_vals = self._merge_insert_values(
                 tcols, when_not_matched_values
             )
-            new_parts.append(
-                ins_frame.select(*[ins_vals[c].alias(c) for c in tcols])
-            )
-        new_files = []
-        if new_parts:
-            rows_df = new_parts[0]
-            for p in new_parts[1:]:
-                rows_df = rows_df.unionByName(p)
-            new_files = self._stage_dataframe(
-                self._align_to_schema(rows_df), base + 1,
-                snap.partition_spec, schema_id=snap.schema_id,
-            )
-        delete_files = snap.delete_files
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-        else:
-            delete_files = delete_files + [
-                {
-                    "path": rel,
-                    "rows": rows,
-                    "key_names": key_cols,
-                    "key_ids": [ids[c] for c in key_cols],
-                    "seq": base + 1,
-                }
-            ]
-        if rows == 0 and not new_files:
-            return snap  # no-op
-        feed = self.change_feed_enabled()
-        change_files = []
-        if feed:
-            change_parts = []
+            inserts = ins_frame.select(*[ins_vals[c].alias(c) for c in tcols])
+
+        def changes() -> list[DataFrame]:
+            parts = []
             if when_matched_delete:
-                change_parts.append(
-                    matched.select(*tcols).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            elif when_matched_update:
-                change_parts.append(
-                    matched.select(*tcols).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                )
-                change_parts.append(
-                    new_parts[0].withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            if when_not_matched_insert:
-                change_parts.append(
-                    new_parts[-1].withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                )
+                parts.append(_change(matched.select(*tcols), "delete"))
+            elif post is not None:
+                parts += [
+                    _change(matched.select(*tcols), "update_preimage"),
+                    _change(post, "update_postimage"),
+                ]
+            if inserts is not None:
+                parts.append(_change(inserts, "insert"))
             if when_not_matched_by_source_delete:
-                change_parts.append(
-                    unmatched.select(*tcols).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            if change_parts:
-                chg = change_parts[0]
-                for p in change_parts[1:]:
-                    chg = chg.unionByName(p)
-                change_files = self._stage_changes(chg, base + 1)
-        return self._commit(
-            base, "merge", snap.files + new_files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read",
-                "delete_keys": rows,
-                "added_files": len(new_files),
-            }
-            | ({"change_feed": "exact"} if feed else {})
-            | (summary_extra or {}),
-            change_files=change_files,
-            delete_files=delete_files,
+                parts.append(_change(unmatched.select(*tcols), "delete"))
+            return parts
+
+        return self._mor_commit(
+            "merge", base, snap, retire, post=post, inserts=inserts,
+            changes=changes, summary_extra=summary_extra,
         )
 
     def merge(
@@ -4449,7 +4361,6 @@ class LakeTable:
         merge_schema: bool = False,
         when_not_matched_condition: Column | None = None,
         when_not_matched_values: dict[str, Column] | None = None,
-        _attempts: int = 2,
     ) -> Snapshot:
         """MERGE INTO (upsert) — ref A13's roadmap 'MERGE for upsert'.
 
@@ -4482,22 +4393,20 @@ class LakeTable:
         source-unmatched, so every file is a rewrite candidate. That
         cost is inherent to the semantics, not the implementation.
 
+        A copy-on-write merge that loses a commit race rebases or
+        re-executes exactly like DELETE/UPDATE (`_publish_rewrite`,
+        `_reexecute`); each attempt re-runs the ``merge_schema``
+        realignment, so a concurrent schema evolution reshapes the
+        source again.
+
         ``mode='merge-on-read'`` (or the ``write_delete_mode`` table
-        property) switches to the no-rewrite path (`_mor_merge`).
+        property) switches to the no-rewrite path: matched rows retire
+        through an equality-delete file written by the merge-on-read
+        commit path shared with DELETE/UPDATE (`_mor_commit`).
         Positional-mode tables fall back to copy-on-write here: MERGE
         is key-addressed, so the equality-delete form is the natural
         MoR encoding; position deletes cover delete/update.
         """
-        if merge_schema:
-            source = self._merge_write_schema(source)
-        if when_matched_update:
-            # the apply loop iterates target columns — an unknown
-            # assignment key would be silently dropped otherwise
-            bad = sorted(set(when_matched_update) - set(self.schema().names))
-            if bad:
-                raise LakehouseError(
-                    f"MERGE UPDATE SET assigns to unknown column(s): {bad}"
-                )
         # Materialize the source ONCE for the whole statement (Delta's
         # merge-source materialization). Both merge paths otherwise
         # re-evaluate the source plan several times — the key-bounds/
@@ -4512,10 +4421,23 @@ class LakeTable:
         owns_cache = not source.is_cached
         if owns_cache:
             source = source.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+
+        def attempt() -> Snapshot:
+            src = self._merge_write_schema(source) if merge_schema else source
+            if when_matched_update:
+                # the apply loop iterates target columns — an unknown
+                # assignment key would be silently dropped otherwise
+                bad = sorted(
+                    set(when_matched_update) - set(self.schema().names)
+                )
+                if bad:
+                    raise LakehouseError(
+                        "MERGE UPDATE SET assigns to unknown column(s): "
+                        f"{bad}"
+                    )
             if self._delete_mode(mode) == "mor":
                 return self._mor_merge(
-                    source, on, when_matched_update, when_matched_delete,
+                    src, on, when_matched_update, when_matched_delete,
                     when_not_matched_insert,
                     when_not_matched_by_source_delete,
                     when_not_matched_by_source_condition, summary_extra,
@@ -4523,13 +4445,15 @@ class LakeTable:
                     when_not_matched_values,
                 )
             return self._merge_cow(
-                source, on, when_matched_update, when_matched_delete,
+                src, on, when_matched_update, when_matched_delete,
                 when_matched_condition, when_not_matched_insert,
                 when_not_matched_by_source_delete,
                 when_not_matched_by_source_condition, summary_extra,
                 when_not_matched_condition, when_not_matched_values,
-                _attempts, mode, merge_schema,
             )
+
+        try:
+            return self._reexecute("merge", attempt)
         finally:
             if owns_cache:
                 source.unpersist()
@@ -4547,15 +4471,10 @@ class LakeTable:
         summary_extra: dict | None,
         when_not_matched_condition: Column | None,
         when_not_matched_values: dict[str, Column] | None,
-        _attempts: int,
-        mode: str | None,
-        merge_schema: bool,
     ) -> Snapshot:
-        """Copy-on-write MERGE body (source already validated and
-        materialized by :meth:`merge`). ``mode``/``merge_schema`` are
-        carried only for the stale-retry re-entry into :meth:`merge`
-        (a lost race against concurrent schema evolution must re-run
-        the merge_schema realignment — r5 ADVICE)."""
+        """One copy-on-write MERGE attempt (source already validated
+        and materialized by :meth:`merge`): stage the rewritten files,
+        then publish through `_publish_rewrite`."""
         base = self.current_version()
         snap = self.snapshot(base)
 
@@ -4598,7 +4517,6 @@ class LakeTable:
             touched = self._merge_bloom_refine(
                 touched, source, on, src_ndv
             )
-        keep = [f for f in snap.files if f not in touched]
         target = self._read_entries(snap, touched)
         src = source.select(
             F.struct(*[F.col(c) for c in source.columns]).alias("__src"),
@@ -4682,130 +4600,59 @@ class LakeTable:
             pass
         elif when_matched_delete:
             change_parts.append(
-                joined.filter(matched)
-                .select(*tcols)
-                .withColumn("_change_type", F.lit("delete"))
+                _change(joined.filter(matched).select(*tcols), "delete")
             )
         elif when_matched_update:
             m = joined.filter(matched)
-            change_parts.append(
-                m.select(*tcols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-            )
-            change_parts.append(
-                m.select(
-                    *[
-                        when_matched_update[c].alias(c)
-                        if c in when_matched_update
-                        else F.col(c)
-                        for c in tcols
-                    ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-            )
+            change_parts += [
+                _change(m.select(*tcols), "update_preimage"),
+                _change(
+                    self._postimage(m, when_matched_update, tcols),
+                    "update_postimage",
+                ),
+            ]
         if feed and when_not_matched_insert:
             change_parts.append(
-                joined.filter(ins)
-                .select(*[ins_vals[c].alias(c) for c in tcols])
-                .withColumn("_change_type", F.lit("insert"))
+                _change(
+                    joined.filter(ins).select(
+                        *[ins_vals[c].alias(c) for c in tcols]
+                    ),
+                    "insert",
+                )
             )
         if feed and when_not_matched_by_source_delete:
             change_parts.append(
-                joined.filter(by_source_del)
-                .select(*tcols)
-                .withColumn("_change_type", F.lit("delete"))
+                _change(joined.filter(by_source_del).select(*tcols), "delete")
             )
-        change_files = []
-        if change_parts:
-            chg = change_parts[0]
-            for p in change_parts[1:]:
-                chg = chg.unionByName(p)
-            change_files = self._stage_changes(chg, base + 1)
+        change_files = self._stage_changes(change_parts, base + 1)
 
-        # Optimistic concurrency, same two tiers as `_rewrite` and
-        # validated ATOMICALLY under the commit lock: concurrent
-        # commits that left the touched files alone and added only
-        # files whose key bounds CANNOT hold a source key rebase
-        # cleanly (they can't change the match set); anything else —
-        # including any conflict against a full-sync (by-source
-        # delete) merge, whose read set is the whole table — discards
-        # this attempt and re-executes against the fresh head.
-        touched_paths = {f["path"] for f in touched}
-        with self._commit_lock():
-            stale = False
-            if self.current_version() != base:
-                try:
-                    if when_not_matched_by_source_delete:
-                        raise CommitConflict(
-                            "full-sync merge cannot rebase"
-                        )
-                    cur = self._validate_dml_rebase(
-                        snap, touched_paths, None
-                    )
-                    snap_paths = {f["path"] for f in snap.files}
-                    for f in cur.files:
-                        if f["path"] not in snap_paths and overlaps(f):
-                            raise CommitConflict(
-                                "merge is stale: a concurrently-added "
-                                "file overlaps the source key range"
-                            )
-                except CommitConflict:
-                    stale = True
-                else:
-                    snap = cur
-                    base = snap.version
-                    keep = [
-                        f
-                        for f in snap.files
-                        if f["path"] not in touched_paths
-                    ]
-            if not stale:
-                final = keep + new_files
-                out = self._prepare_snapshot(
-                    base, "merge", final, snap.schema_json,
-                    summary={
-                        "added_files": len(new_files),
-                        "rewritten_files": len(touched),
-                        "pruned_files": len(keep),
-                    }
-                    | ({"change_feed": "exact"} if feed else {})
-                    | (summary_extra or {}),
-                    change_files=change_files,
-                    delete_files=self._live_deletes(
-                        snap.delete_files, final
-                    ),
+        # Concurrent commits that left the touched files alone rebase
+        # only if they added no file whose key bounds CAN hold a source
+        # key (it could change the match set); a full-sync (by-source
+        # delete) merge reads the whole table, so it never rebases.
+        def rebase_rule(old: Snapshot, cur: Snapshot) -> None:
+            if when_not_matched_by_source_delete:
+                raise CommitConflict("full-sync merge cannot rebase")
+            old_paths = {f["path"] for f in old.files}
+            if any(
+                f["path"] not in old_paths and overlaps(f) for f in cur.files
+            ):
+                raise CommitConflict(
+                    "merge is stale: a concurrently-added file overlaps "
+                    "the source key range"
                 )
-                self._publish(out)
-                return out
-        # lock released — re-execute the whole merge against the fresh
-        # head (serializable re-execution). Drop this attempt's staged
-        # data and change files first (same as _rewrite_once's stale
-        # path): under sustained contention each lost attempt would
-        # otherwise leak a full rewrite-set of parquet until vacuum.
-        self._discard_staged(new_files, change_files)
-        if _attempts <= 0:
-            raise CommitConflict(
-                "merge kept conflicting with concurrent commits "
-                "(retries exhausted)"
-            )
-        return self.merge(
-            source, on,
-            when_matched_update=when_matched_update,
-            when_matched_delete=when_matched_delete,
-            when_matched_condition=when_matched_condition,
-            when_not_matched_insert=when_not_matched_insert,
-            when_not_matched_by_source_delete=(
-                when_not_matched_by_source_delete
-            ),
-            when_not_matched_by_source_condition=(
-                when_not_matched_by_source_condition
-            ),
-            summary_extra=summary_extra,
-            mode=mode,
-            when_not_matched_condition=when_not_matched_condition,
-            when_not_matched_values=when_not_matched_values,
-            merge_schema=merge_schema,
-            _attempts=_attempts - 1,
+
+        return self._publish_rewrite(
+            "merge", snap, {f["path"] for f in touched}, None, new_files,
+            change_files,
+            lambda keep: {
+                "added_files": len(new_files),
+                "rewritten_files": len(touched),
+                "pruned_files": len(keep),
+            }
+            | ({"change_feed": "exact"} if feed else {})
+            | (summary_extra or {}),
+            rebase_rule,
         )
 
     _MERGE_BLOOM_NDV_CAP = 1024
@@ -5630,6 +5477,11 @@ def _small_by_rowcount(
         return rows * max(width, 1) <= limit_bytes
     except Exception:
         return _is_small(df)
+
+
+def _change(df: DataFrame, change_type: str) -> DataFrame:
+    """Tag DML rows for the change feed (``_stage_changes``)."""
+    return df.withColumn("_change_type", F.lit(change_type))
 
 
 def _is_small(df: DataFrame, limit_bytes: int = 128 * 1024 * 1024) -> bool:

@@ -27,13 +27,12 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def shuffle_partitions_for(input_bytes: int, cpus: int | None = None) -> int:
+def shuffle_partitions_for(input_bytes: int) -> int:
     """Size shuffle partitions from input volume: ~32 MB of input per
     partition, floored at 8 (healthy local minimum), capped at 2000.
     At 100 TB this yields ~3k partitions pre-AQE; AQE coalesces or
     splits from there. Fixed values waste task-launch overhead at
     small scale and under-partition at large scale — size to data."""
-    cpus = cpus or default_parallelism()
     return max(8, min(2000, input_bytes // (32 * 1024 * 1024) + 1))
 
 

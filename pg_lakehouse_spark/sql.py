@@ -9634,18 +9634,11 @@ class LakeSQL:
         if self._capture_returning == "UPDATE":
             # PG UPDATE ... RETURNING serves the POST-images; compute
             # them from the pre-commit snapshot + the assignments (the
-            # same frame the CoW rewrite writes), so no change feed is
-            # needed and no-op assignments still return their rows —
-            # exactly PG
-            pre = tbl.read().filter(condition)
-            schema = tbl.schema()
-            self._returned_df = pre.select(
-                *[
-                    assignments[c].cast(schema[c].dataType).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in pre.columns
-                ]
+            # table's own postimage projection, assignment cast
+            # included), so no change feed is needed and no-op
+            # assignments still return their rows — exactly PG
+            self._returned_df = tbl._postimage(
+                tbl.read().filter(condition), assignments
             )
         return tbl.update(condition, assignments)
 
@@ -11095,13 +11088,8 @@ class LakeSQL:
                     )
                 )
             postimage = (lambda _m: post) if post is not None else None
-            if dm == "mor-pos":
-                return tbl._mor_positional_dml(
-                    verb.lower(), None, postimage=postimage,
-                    matched=matched,
-                )
             return tbl._mor_dml(
-                verb.lower(), None, postimage=postimage, matched=matched
+                verb.lower(), None, dm, postimage=postimage, matched=matched
             )
         finally:
             self.spark.catalog.dropTempView(view)

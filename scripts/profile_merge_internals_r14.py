@@ -61,15 +61,17 @@ def main() -> None:
     spec = REGISTRY.get("rollup_incremental")
     spec.fn(spark, sf_dir).count()  # warm up
 
+    # no hasattr gate: a renamed method must fail here, not silently
+    # drop out of the report
     for name in (
-        "_stage_dataframe", "_merge_cow", "_merge_bloom_refine",
+        "_stage_dataframe", "_merge_cow", "_mor_merge", "_mor_commit",
+        "_merge_bloom_refine", "_publish_rewrite", "_validate_dml_rebase",
         "_prepare_snapshot", "_publish", "_apply_check_guards",
-        "_align_to_schema", "merge", "append", "overwrite",
-        "create_table_as", "read_incremental", "_read_entries",
-        "_validate_dml_rebase",
+        "_align_to_schema", "_postimage", "_stage_changes", "merge",
+        "append", "overwrite", "create_table_as", "read_incremental",
+        "_read_entries",
     ):
-        if hasattr(lh.LakeTable, name):
-            wrap_method(lh.LakeTable, name)
+        wrap_method(lh.LakeTable, name)
     for name in ("_parquet_footer_stats", "_build_merge_join"):
         wrap_fn(lh, name)
 
